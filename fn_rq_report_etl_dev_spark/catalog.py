@@ -15,7 +15,9 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -34,8 +36,40 @@ STAGING_PARTITIONED_SCHEMA = T.StructType(
 )
 
 
+@dataclass(frozen=True)
+class FileKeyRange:
+    """One data file of a table and its key range from the Parquet footer;
+    ``lo``/``hi`` are None when the footer holds no min/max for the key."""
+
+    path: str
+    rows: int
+    lo: int | None
+    hi: int | None
+
+
+def _parquet_files(directory: str) -> list[str]:
+    return sorted(
+        os.path.join(directory, f)
+        for f in os.listdir(directory)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _footer_key_range(path: str, column: str) -> FileKeyRange:
+    md = pq.read_metadata(path)
+    lo = hi = None
+    if md.num_row_groups and column in md.schema.names:
+        j = md.schema.names.index(column)
+        stats = [md.row_group(i).column(j).statistics for i in range(md.num_row_groups)]
+        if all(st is not None and st.has_min_max for st in stats):
+            lo, hi = min(st.min for st in stats), max(st.max for st in stats)
+    return FileKeyRange(path, md.num_rows, lo, hi)
+
+
 class Warehouse:
-    """Parquet-directory warehouse with atomic overwrite semantics."""
+    """Parquet-directory warehouse. A table is one directory; every
+    rewrite builds a new directory beside it and swaps it in
+    (:meth:`swap_in`), so readers see the old or the new version whole."""
 
     def __init__(self, root: str):
         self.root = root
@@ -60,14 +94,95 @@ class Warehouse:
     def overwrite_atomic(self, df: DataFrame, table: str) -> None:
         """Write to a temp dir, then swap — safe when ``df`` reads from the
         table being replaced (the merge reads target and rewrites it)."""
-        final = self.path(table)
-        tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-        old = f"{final}.old-{uuid.uuid4().hex[:8]}"
+        tmp = self.tmp_path(table)
         df.write.mode("overwrite").parquet(tmp)
+        self.swap_in(tmp, table)
+
+    def data_files(self, table: str) -> list[str]:
+        """Paths of the Parquet files of a flat table."""
+        return _parquet_files(self.path(table))
+
+    def key_ranges(self, table: str, column: str) -> list[FileKeyRange]:
+        """Each data file's row count and ``column`` min/max, read from the
+        Parquet footers on the driver — no Spark job."""
+        return [_footer_key_range(p, column) for p in self.data_files(table)]
+
+    def rewrite_files(
+        self,
+        df: DataFrame,
+        table: str,
+        file_col: str,
+        max_rows: int,
+        carried: list[str],
+    ) -> None:
+        """Commit a new version of ``table``: the rows of ``df`` plus the
+        files ``carried`` over unchanged from the live version.
+
+        Each value of ``file_col`` (not stored) gets its own files, of at
+        most ``max_rows`` rows. When ``df`` holds each value in one
+        partition, sorted by a key within it, and ``file_col`` is a range
+        of that key, the files' key ranges are disjoint. Carried files are
+        hard-linked under their own basenames, so they keep their path
+        across the swap and the old version stays whole until it."""
+        tmp = self.tmp_path(table)
+        (
+            df.write.mode("overwrite")
+            .partitionBy(file_col)
+            .option("maxRecordsPerFile", max_rows)
+            .parquet(tmp)
+        )
+        # Flatten <tmp>/<file_col>=<v>/part-*.parquet into <tmp>; the value
+        # prefixes the name, because Spark numbers files per directory.
+        for entry in os.listdir(tmp):
+            sub = os.path.join(tmp, entry)
+            if not os.path.isdir(sub):
+                continue
+            value = entry.split("=", 1)[1]
+            for p in _parquet_files(sub):
+                os.rename(p, os.path.join(tmp, f"{value}-{os.path.basename(p)}"))
+            shutil.rmtree(sub)
+        for path in carried:
+            os.link(path, os.path.join(tmp, os.path.basename(path)))
+        if not _parquet_files(tmp):
+            # Nothing left at all: keep the table readable with one empty,
+            # schema-carrying file.
+            shutil.rmtree(tmp)
+            df.drop(file_col).limit(0).write.parquet(tmp)
+        self.swap_in(tmp, table)
+
+    def tmp_path(self, table: str) -> str:
+        return f"{self.path(table)}.tmp-{uuid.uuid4().hex[:8]}"
+
+    def _old_versions(self, table: str) -> list[str]:
+        prefix = f"{table}.old-"
+        return [self.path(e) for e in os.listdir(self.root) if e.startswith(prefix)]
+
+    def swap_in(self, tmp: str, table: str) -> None:
+        """Make the fully written directory ``tmp`` the table: rename the
+        live directory aside, rename ``tmp`` in, delete the old one. A
+        crash between the two renames leaves only ``<table>.old-*``;
+        :meth:`restore_interrupted_swap` puts it back. Leftovers of a crash
+        during the delete are removed first, so that directory is never
+        ambiguous."""
+        final = self.path(table)
+        old = f"{final}.old-{uuid.uuid4().hex[:8]}"
         if os.path.exists(final):
+            for stale in self._old_versions(table):
+                shutil.rmtree(stale, ignore_errors=True)
             os.rename(final, old)
         os.rename(tmp, final)
         shutil.rmtree(old, ignore_errors=True)
+
+    def restore_interrupted_swap(self, table: str) -> None:
+        """If a swap died between its two renames, the table is missing
+        and its last version sits in ``<table>.old-*``: rename it back."""
+        if os.path.exists(self.path(table)):
+            return
+        olds = self._old_versions(table)
+        if len(olds) > 1:
+            raise RuntimeError(f"{table}: several old versions, cannot tell the last: {olds}")
+        if olds:
+            os.rename(olds[0], self.path(table))
 
     def append_partitioned(self, df: DataFrame, table: str, partition_col: str) -> None:
         """Append with hive-style directory partitioning — the layout that
@@ -169,17 +284,19 @@ def upgrade_staging_layout(spark: SparkSession, wh: Warehouse) -> bool:
     partitioned = flat.withColumn(
         STAGING_PARTITION_COL, F.expr("try_cast(TradeInDate AS DATE)")
     )
-    tmp = wh.path(STAGING_TABLE) + ".upgrade"
+    tmp = wh.tmp_path(STAGING_TABLE)
     partitioned.write.mode("overwrite").partitionBy(STAGING_PARTITION_COL).parquet(tmp)
-    wh.drop(STAGING_TABLE)
-    os.rename(tmp, wh.path(STAGING_TABLE))
+    wh.swap_in(tmp, STAGING_TABLE)
     return True
 
 
 def ensure_tables(spark: SparkSession, wh: Warehouse) -> None:
-    """Idempotent bootstrap: migrate the legacy name, upgrade a flat
-    staging layout, then create any missing table as an empty Parquet
-    dataset with the declared schema."""
+    """Idempotent bootstrap: restore a table a crashed swap left missing,
+    migrate the legacy name, upgrade a flat staging layout, then create
+    any missing table as an empty Parquet dataset with the declared
+    schema."""
+    for table in (STAGING_TABLE, TARGET_TABLE):
+        wh.restore_interrupted_swap(table)
     migrate_legacy_staging(wh)
     upgrade_staging_layout(spark, wh)
     # Deliberately NOT coalesce(1): wrapping the empty LocalRelation in a
@@ -222,8 +339,7 @@ def compact_table(
             break
 
     df = wh.read(spark, table, schema)
-    final = wh.path(table)
-    tmp = f"{final}.compact-{uuid.uuid4().hex[:8]}"
+    tmp = wh.tmp_path(table)
     if part_col is not None:
         # One writer task per hash-bucket of partitions → one file per
         # partition directory, layout unchanged.
@@ -235,13 +351,5 @@ def compact_table(
         )
     else:
         df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    old = f"{final}.old-{uuid.uuid4().hex[:8]}"
-    os.rename(final, old)
-    os.rename(tmp, final)
-    shutil.rmtree(old, ignore_errors=True)
-    return sum(
-        1
-        for _, _, files in os.walk(wh.path(table))
-        for f in files
-        if f.endswith(".parquet")
-    )
+    wh.swap_in(tmp, table)
+    return wh.file_count(table)

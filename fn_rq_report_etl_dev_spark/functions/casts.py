@@ -15,24 +15,36 @@ from pyspark.sql import functions as F
 from ..functions.timestamps import parse_timestamp_multi
 
 
-def lenient_cast(col: Column, sql_type: str) -> Column:
+def lenient_cast(col: Column, sql_type: str, fmt: str | None = None) -> Column:
     """try_cast to ``sql_type``; timestamps go through the multi-format
-    lenient parser instead of the single-format ANSI cast."""
+    lenient parser instead of the single-format ANSI cast.
+
+    ``fmt`` is the pattern a timestamp column is known to be written in:
+    values in that pattern take one exact parse and only the rest run the
+    multi-format chain (``coalesce`` evaluates it only on NULL). The
+    result is the chain's for every input — the chain tries the same
+    pattern on the same string (pinned in tests/test_properties.py)."""
     if sql_type == "timestamp":
-        return parse_timestamp_multi(col.cast("string"))
+        s = col.cast("string")
+        parsed = parse_timestamp_multi(s)
+        return parsed if fmt is None else F.coalesce(F.try_to_timestamp(s, F.lit(fmt)), parsed)
     return col.cast("string").try_cast(sql_type)
 
 
-def apply_type_map(df: DataFrame, type_map: dict[str, str]) -> DataFrame:
-    """Project ``df`` onto ``type_map``'s columns with lenient casts.
+def apply_type_map(
+    df: DataFrame, type_map: dict[str, str], formats: dict[str, str] | None = None
+) -> DataFrame:
+    """Project ``df`` onto ``type_map``'s columns with lenient casts;
+    ``formats`` gives timestamp columns' known patterns (``lenient_cast``).
 
     Columns absent from ``df`` become typed NULLs (the reference's
     ``row.get(col, None)`` projection contract, rqtradein_etl.py:338).
     """
+    formats = formats or {}
     cols = []
     for name, sql_type in type_map.items():
         if name in df.columns:
-            cols.append(lenient_cast(F.col(name), sql_type).alias(name))
+            cols.append(lenient_cast(F.col(name), sql_type, formats.get(name)).alias(name))
         else:
             cols.append(F.lit(None).cast(sql_type).alias(name))
     return df.select(*cols)

@@ -6,9 +6,7 @@ an *apply*-side operator; ``snapshot_diff`` is its inverse — given
 yesterday's and today's table states, emit the minimal change set. At
 100 TB this is ONE full-outer join shuffled on the key (both sides
 partial-aggregated nothing — scans stream), and the per-column comparison
-is a null-safe expression, not a UDF. Pair it with the bucketed target
-(operators/merge_partitioned.py) and both sides arrive pre-partitioned,
-making the join exchange-free.
+is a null-safe expression, not a UDF.
 """
 
 from __future__ import annotations

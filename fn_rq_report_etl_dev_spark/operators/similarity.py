@@ -1106,11 +1106,8 @@ DEFAULT_MAX_CELL = 1024  # sub-cell target size for the hot-cell salt split
 
 def hot_cell_salt(id_col: str, csz_col: str, max_cell: int) -> Column:
     """The hot-cell sub-cell salt, ``md5int(id) % ceil(csz/max_cell)``,
-    as one shared expression — :func:`semantic_dedup` executes it and
-    `scripts_scaling_experiment.py semdedup` measures the pair space it
-    induces, so sharing the builder keeps the measured split
-    definitionally the executed one (and the DuckDB oracle replays the
-    same integer arithmetic)."""
+    as one shared expression — :func:`semantic_dedup` executes it and the
+    DuckDB oracle replays the same integer arithmetic."""
     return (
         F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
         .cast("bigint")

@@ -147,6 +147,12 @@ EAGER_SCHEMAS: dict[str, str] = {
     "embedding_kmeans_lloyd": "vec_id bigint, cell int, dist double",
     # SemDeDup builds/persists the shared codebook index during build
     "dedup_semantic_clusters": "vec_id bigint, cell int, kept bigint",
+    # localCheckpoint()s the LSH candidate edges during build (eager), so
+    # the whole LSH pass runs before the DataFrame is returned
+    "graph_triangle_count": (
+        "n_nodes bigint, n_edges bigint, n_wedges bigint, n_triangles bigint, "
+        "clustering double"
+    ),
     # collects the two-dimension min/max normalization bounds (driver scalars)
     "zorder_layout_events": (
         "bucket bigint, n_rows bigint, min_user bigint, max_user bigint, "

@@ -474,7 +474,7 @@ def incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL the delta join, and the oracle proves it equals a full
     recompute. Only the delta leg runs per batch at scale (the history
     union is stored data; with both sides bucketed by the join key the
-    delta join is also co-located — see operators/merge_partitioned.py).
+    delta join is also co-located).
 
     3VL seam pinned here: the delta predicate must be the NEGATION of the
     history predicate, not its mirror — ``l_shipdate >= cutoff`` silently

@@ -4,6 +4,7 @@ re-delivered records; idempotence; retention; catalog bootstrap."""
 
 from __future__ import annotations
 
+import os
 from decimal import Decimal
 
 import pytest
@@ -213,3 +214,248 @@ def test_daily_batch_envelope_sf01(spark):
     bench.time_pipeline_daily_batch(spark, sf_dir)  # warm-up
     sec = bench.time_pipeline_daily_batch(spark, sf_dir)
     assert sec < 15.0, f"daily batch envelope blown: {sec:.1f}s >= 15s"
+
+
+# ---------------------------------------------------------------------------
+# The file-pruned merge: same table and counts as a full-table merge_upsert
+
+
+def _plant_target(spark, wh, ranges, null_keys=2):
+    """Replace the target with one file per key range [lo, hi); the first
+    file also holds ``null_keys`` NULL-key rows."""
+    from fn_rq_report_etl_dev_spark.schemas import TARGET_SCHEMA
+
+    def rows(ids, store):
+        fill = {"SaleInvoiceID": ids["id"], "TradeInTransactionID": ids["id"] + 10_000,
+                "StoreName": F.lit(store), "TradeInAmount": F.lit("5.00")}
+        return ids.select(*[
+            fill.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in TARGET_SCHEMA.fields
+        ])
+
+    wh.drop(TARGET_TABLE)
+    for i, (lo, hi) in enumerate(ranges):
+        df = rows(spark.range(lo, hi), f"s{i}")
+        if i == 0 and null_keys:
+            nulls = rows(spark.range(null_keys), "null-key").withColumn(
+                "SaleInvoiceID", F.lit(None).cast("bigint"))
+            df = df.unionByName(nulls)
+        df.coalesce(1).write.mode("append").parquet(wh.path(TARGET_TABLE))
+
+
+def _stage(spark, wh, keys):
+    """Land a batch with these raw SaleInvoiceID values in staging (None
+    leaves the field out)."""
+    from fn_rq_report_etl_dev_spark.catalog import STAGING_PARTITION_COL
+    from fn_rq_report_etl_dev_spark.pipeline import _staged_batch
+
+    rows = [
+        {"TradeInTransactionID": str(i), "TradeInDate": "2024-03-15T01:00:00Z",
+         "TradeInAmount": "7.00", "StoreName": "batch"}
+        | ({} if k is None else {"SaleInvoiceID": k})
+        for i, k in enumerate(keys)
+    ]
+    wh.append_partitioned(_staged_batch(_batch(spark, rows), _now()), STAGING_TABLE,
+                          STAGING_PARTITION_COL)
+
+
+def _full_merge(spark, wh):
+    """The full-table merge of staging into the whole target: its rows and
+    counts, collected before the pruned merge replaces the files."""
+    from fn_rq_report_etl_dev_spark.catalog import STAGING_PARTITIONED_SCHEMA
+    from fn_rq_report_etl_dev_spark.operators.merge import MERGE_ACTION, merge_upsert
+    from fn_rq_report_etl_dev_spark.pipeline import _deduped_staging
+
+    staging = wh.read(spark, STAGING_TABLE, STAGING_PARTITIONED_SCHEMA)
+    merged = merge_upsert(
+        wh.read(spark, TARGET_TABLE), _deduped_staging(staging), "SaleInvoiceID",
+        audit_inserted="ETLRowInsertedEST", audit_updated="ETLRowUpdatedEST",
+        now=_now(), keep_action=True,
+    ).collect()
+    actions = [r[MERGE_ACTION] for r in merged]
+    counts = {"inserted": actions.count("insert"), "updated": actions.count("update")}
+    return _rows(r.asDict() for r in merged), counts
+
+
+def _rows(dicts):
+    from fn_rq_report_etl_dev_spark.schemas import TARGET_SCHEMA
+
+    return sorted(repr(tuple(d[f.name] for f in TARGET_SCHEMA.fields)) for d in dicts)
+
+
+def _target_rows(spark, wh):
+    return _rows(r.asDict() for r in wh.read(spark, TARGET_TABLE).collect())
+
+
+def _inodes(wh):
+    return {os.path.basename(p): os.stat(p).st_ino for p in wh.data_files(TARGET_TABLE)}
+
+
+RANGES = [(0, 100), (100, 200), (200, 300)]
+
+
+def _planted(wh):
+    """{file name: index of the planted range it holds}."""
+    return {
+        os.path.basename(f.path): f.lo // 100
+        for f in wh.key_ranges(TARGET_TABLE, "SaleInvoiceID")
+    }
+
+
+@pytest.mark.parametrize(
+    "keys, untouched",
+    [
+        (["5", "17"], {1, 2}),
+        (["150"], {0, 2}),
+        (["299", "250"], {0, 1}),
+        (["0", "150", "299"], set()),
+        (["5", "250"], {1}),  # the new files must not overlap the carried one
+        (["-5", "300", "1000"], {0, 1, 2}),  # pure inserts touch no file
+        ([None, "abc", None, "120"], {0, 2}),  # uncastable keys cast to NULL
+    ],
+    ids=["first", "middle", "last", "all", "first_and_last", "beyond", "null_keys"],
+)
+def test_pruned_merge_equals_full_merge(spark, wh, keys, untouched):
+    from fn_rq_report_etl_dev_spark.pipeline import merge_to_target
+
+    ensure_tables(spark, wh)
+    _plant_target(spark, wh, RANGES)
+    _stage(spark, wh, keys)
+    planted, before = _planted(wh), _inodes(wh)
+    want_rows, want_counts = _full_merge(spark, wh)
+
+    assert merge_to_target(spark, wh, now=_now()) == want_counts
+    assert _target_rows(spark, wh) == want_rows
+    after = _inodes(wh)
+    assert {planted[n] for n, ino in before.items() if after.get(n) == ino} == untouched
+    _assert_disjoint(wh)
+
+
+def _assert_disjoint(wh):
+    ranges = sorted(
+        (f.lo, f.hi) for f in wh.key_ranges(TARGET_TABLE, "SaleInvoiceID") if f.lo is not None
+    )
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:])), ranges
+
+
+def test_pruned_merge_into_empty_target(spark, wh):
+    from fn_rq_report_etl_dev_spark.pipeline import merge_to_target
+
+    ensure_tables(spark, wh)
+    _stage(spark, wh, ["3", "1", None, "3"])
+    want_rows, want_counts = _full_merge(spark, wh)
+    assert merge_to_target(spark, wh, now=_now()) == want_counts == {"inserted": 3, "updated": 0}
+    assert _target_rows(spark, wh) == want_rows
+
+
+def test_empty_batch_into_empty_target_keeps_it_readable(spark, wh):
+    """Nothing to write and nothing to carry: the new version still holds
+    one schema-carrying file, so the next reader and merge work."""
+    from fn_rq_report_etl_dev_spark.schemas import TARGET_SCHEMA
+
+    assert run_etl(spark, wh, _batch(spark, []), now=_now()) == {"inserted": 0, "updated": 0}
+    assert len(wh.data_files(TARGET_TABLE)) == 1
+    assert wh.read(spark, TARGET_TABLE).schema == TARGET_SCHEMA
+    assert run_etl(spark, wh, _batch(spark, [{"SaleInvoiceID": "1", "TradeInTransactionID": "1"}]),
+                   now=_now()) == {"inserted": 1, "updated": 0}
+
+
+def test_pruned_merge_reads_files_without_key_statistics(spark, wh):
+    """A file whose footer has no key min/max may hold any key: it is read
+    and rewritten, never skipped."""
+    import pyarrow.parquet as pq
+
+    from fn_rq_report_etl_dev_spark.pipeline import merge_to_target
+
+    ensure_tables(spark, wh)
+    _plant_target(spark, wh, RANGES)
+    planted = _planted(wh)
+    blind = next(n for n, i in planted.items() if i == 1)
+    path = os.path.join(wh.path(TARGET_TABLE), blind)
+    pq.write_table(pq.read_table(path), path, write_statistics=False, coerce_timestamps="us")
+    os.remove(os.path.join(wh.path(TARGET_TABLE), f".{blind}.crc"))  # now stale
+    assert [f.lo for f in wh.key_ranges(TARGET_TABLE, "SaleInvoiceID")].count(None) == 1
+    _stage(spark, wh, ["150", "5"])
+    before = _inodes(wh)
+    want_rows, want_counts = _full_merge(spark, wh)
+
+    assert merge_to_target(spark, wh, now=_now()) == want_counts == {"inserted": 0, "updated": 2}
+    assert _target_rows(spark, wh) == want_rows
+    after = _inodes(wh)
+    assert blind not in after
+    assert {planted[n] for n, ino in before.items() if after.get(n) == ino} == {2}
+
+
+def test_target_stays_key_clustered_across_days(spark, wh, monkeypatch):
+    """After several daily runs the target's file key ranges are disjoint
+    and bounded in rows, and a file no staged key falls in keeps its inode.
+    Staging still holds yesterday's rows during today's merge (retention
+    runs after it), so those keys touch files too."""
+    from fn_rq_report_etl_dev_spark import pipeline
+
+    monkeypatch.setattr(pipeline, "TARGET_FILE_ROWS", 16)
+    days = [
+        list(range(0, 60)),
+        list(range(60, 90)) + [3, 4],  # new keys, and updates in the first file
+        list(range(90, 100)) + [70, None],
+    ]
+    for d, keys in enumerate(days):
+        day = f"2024-03-{15 + d}"
+        before = {
+            os.path.basename(f.path): (f, os.stat(f.path).st_ino)
+            for f in wh.key_ranges(TARGET_TABLE, "SaleInvoiceID")
+        } if wh.exists(TARGET_TABLE) else {}
+        rows = [
+            {"TradeInTransactionID": str(1000 * d + i), "TradeInDate": f"{day}T01:00:00Z"}
+            | ({} if k is None else {"SaleInvoiceID": str(k)})
+            for i, k in enumerate(keys)
+        ]
+        run_etl(spark, wh, _batch(spark, rows), now=F.to_timestamp(F.lit(f"{day} 12:00:00")))
+        _assert_disjoint(wh)
+        assert all(f.rows <= 16 for f in wh.key_ranges(TARGET_TABLE, "SaleInvoiceID"))
+        after = _inodes(wh)
+        staged = [k for k in keys + (days[d - 1] if d else []) if k is not None]
+        for name, (f, ino) in before.items():
+            if f.lo is not None and not any(f.lo <= k <= f.hi for k in staged):
+                assert after.get(name) == ino, (d, name)
+        if d == 2:  # staging holds days 1-2 only: the files of keys 16-59 are carried
+            assert any(after.get(n) == ino for n, (_, ino) in before.items())
+    got = wh.read(spark, TARGET_TABLE)
+    assert got.filter(F.col("SaleInvoiceID").isNotNull()).count() == 100
+    assert got.filter(F.col("SaleInvoiceID").isNull()).count() == 1
+
+
+def test_crash_between_swap_renames_converges_on_rerun(spark, tmp_path, monkeypatch):
+    """A crash after the live target is renamed aside but before the new
+    version is renamed in leaves no target directory. The next run restores
+    the old version instead of bootstrapping an empty target, and then
+    produces the table an uninterrupted run produces."""
+    import fn_rq_report_etl_dev_spark.catalog as catalog
+
+    day1 = [{"SaleInvoiceID": str(k), "TradeInTransactionID": str(k),
+             "TradeInDate": "2024-03-15T01:00:00Z", "TradeInAmount": "1.00"} for k in range(20)]
+    day2 = [{"SaleInvoiceID": str(k), "TradeInTransactionID": str(100 + k),
+             "TradeInDate": "2024-03-16T01:00:00Z", "TradeInAmount": "2.00"} for k in range(15, 30)]
+    now2 = F.to_timestamp(F.lit("2024-03-16 12:00:00"))
+
+    clean = Warehouse(str(tmp_path / "clean"))
+    run_etl(spark, clean, _batch(spark, day1), now=_now())
+    want_counts = run_etl(spark, clean, _batch(spark, day2), now=now2)
+
+    wh = Warehouse(str(tmp_path / "crashed"))
+    run_etl(spark, wh, _batch(spark, day1), now=_now())
+    real_rename = os.rename
+
+    def crash_before_second_rename(src, dst):
+        if dst == wh.path(TARGET_TABLE) and ".tmp-" in src:
+            raise OSError("simulated crash between the swap's renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(catalog.os, "rename", crash_before_second_rename)
+    with pytest.raises(OSError, match="simulated crash"):
+        run_etl(spark, wh, _batch(spark, day2), now=now2)
+    monkeypatch.undo()
+    assert not os.path.exists(wh.path(TARGET_TABLE))
+
+    assert run_etl(spark, wh, _batch(spark, day2), now=now2) == want_counts
+    assert _target_rows(spark, wh) == _target_rows(spark, clean)

@@ -14,6 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from fn_rq_report_etl_dev_spark.functions.casts import lenient_cast
 from fn_rq_report_etl_dev_spark.functions.timestamps import parse_timestamp_multi
 from fn_rq_report_etl_dev_spark.operators.dedup import latest_per_key
 from fn_rq_report_etl_dev_spark.operators.merge import merge_upsert
@@ -63,6 +64,53 @@ def test_parser_matches_reference_semantics(spark, cases):
     ]
     expected = [exp for _, exp in rows]
     assert got == expected
+
+
+def _adversarial(dt: datetime, shape: int, digits: int, junk: str) -> str:
+    """``dt`` in a shape near, but not always in, the staged patterns."""
+    frac = f".{dt.microsecond:06d}{dt.microsecond % 1000:03d}"[: digits + 1] if digits else ""
+    day, clock = f"{dt:%Y-%m-%d}", f"{dt:%H:%M:%S}"
+    return [
+        f"{day} {clock}{frac}",  # both staged shapes, and ragged fractions
+        f"{day}T{clock}{frac}",
+        f"{day} {clock}{frac}Z",
+        f"{day}T{clock}{frac}+05:30",
+        f"{day} {clock}{frac}-0800",
+        day,
+        f"{day} {clock[:5]}",
+        f" {day} {clock}{frac}",
+        f"{day} {clock}{frac}{junk}",
+        junk,
+    ][shape]
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(
+        st.tuples(_dts, st.integers(0, 9), st.integers(0, 9), st.text(max_size=6)),
+        min_size=1,
+        max_size=60,
+    )
+)
+def test_known_pattern_cast_equals_multi_format_parse(spark, cases):
+    """The merge casts staged timestamps with one exact parse in the
+    pattern normalize_batch writes, before the multi-format chain: for
+    every string, canonical or not, the result is the chain's alone."""
+    from fn_rq_report_etl_dev_spark.pipeline import STAGED_EST_FORMAT, STAGED_TS_FORMAT
+
+    raws = [
+        raw
+        for dt, *rest in cases
+        for raw in (f"{dt:%Y-%m-%d %H:%M:%S.%f}", f"{dt:%Y-%m-%d %H:%M:%S}", _adversarial(dt, *rest))
+    ]
+    df = spark.createDataFrame([(r,) for r in raws], "raw string")
+    raw = F.col("raw")
+    chain = parse_timestamp_multi(raw)
+    bad = df.select(
+        F.count(F.when(~lenient_cast(raw, "timestamp", STAGED_TS_FORMAT).eqNullSafe(chain), 1)),
+        F.count(F.when(~lenient_cast(raw, "timestamp", STAGED_EST_FORMAT).eqNullSafe(chain), 1)),
+    ).first()
+    assert tuple(bad) == (0, 0)
 
 
 @settings(max_examples=10, deadline=None)
